@@ -36,10 +36,7 @@ object ConnectedComponents {
       .localCheckpoint(false)
     var converged = false
     var round = 0
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    graft.core.IterCache.loopConf(spark, None) {
       var sig = signature(e)
       // scale-adaptive loop partitioning (guide §2.2): the first signature
       // action materialized `e`, so its row count is known — derive the
@@ -54,9 +51,6 @@ object ConnectedComponents {
         sig = nextSig
         e = next
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
     }
     // Converged state is a forest of stars (src = component min, dst = member).
     val labels = e.select(col("dst").as("vid"), col("src").as("component"))
@@ -106,7 +100,7 @@ object ConnectedComponents {
     val (sym, parts) = graft.core.IterCache.byKeyAdaptive(LinkGraph.symmetrize(edges), "src")
     val init = vertices.select(col("vid"), col("vid").as("component"), lit(true).as("active"))
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts), counts = Seq("active")) { state =>
       val msgs = sym
         .join(state.where(col("active")).select(col("vid").as("src"), col("component"))
           .hint("shuffle_hash"), "src")
@@ -116,7 +110,7 @@ object ConnectedComponents {
         col("vid"),
         least(col("component"), coalesce(col("m"), col("component"))).as("component"),
         (coalesce(col("m"), col("component")) < col("component")).as("active"))
-    } { next => next.where(col("active")).count() }
+    }
     sym.unpersist(false)
     res.state.select("vid", "component")
   }

@@ -26,8 +26,11 @@ import org.apache.spark.sql.functions._
   * copy would re-exchange |E| rows every superstep — the 2× storage buys
   * vertex-sized-only shuffles, the same trade PageRank makes once). The two
   * normalizers are 1-row aggregates joined back via broadcast. The auth
-  * frame is referenced twice per superstep (hub messages + carried state), so
-  * it is truncated to a lazy leaf to keep it computed once.
+  * frame is referenced twice per superstep (hub messages + carried state);
+  * exchange reuse shares its `authRaw` shuffle, so only the narrow join over
+  * that shuffle's output runs twice. (A nested localCheckpoint of `auth`
+  * would be a leaf derived from the state, which IterativeRunner's plan
+  * replay rejects.)
   */
 object Hits {
 
@@ -42,7 +45,7 @@ object Hits {
     val init = vertices.select(col("vid"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
     val res = graft.core.IterativeRunner.loop(init, iterations,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val authRaw = bySrc
         .join(state.select(col("vid").as("src"), col("hub")).hint("shuffle_hash"), "src")
         .groupBy(col("dst").as("vid"))
@@ -52,7 +55,6 @@ object Hits {
         .join(authRaw.hint("shuffle_hash"), Seq("vid"), "left")
         .crossJoin(broadcast(amax))
         .select(col("vid"), coalesce(col("araw") / col("amax"), lit(0.0)).as("auth"))
-        .localCheckpoint(false) // referenced twice below — compute once
       val hubRaw = byDst
         .join(auth.select(col("vid").as("dst"), col("auth")).hint("shuffle_hash"), "dst")
         .groupBy(col("src").as("vid"))
@@ -64,7 +66,7 @@ object Hits {
         .select(col("vid"),
           coalesce(col("hraw") / col("hmax"), lit(0.0)).as("hub"),
           col("auth"))
-    } { _ => 1L } // fixed-iteration run, like PageRank.runFixed
+    } // fixed-iteration run, like PageRank.runFixed
 
     bySrc.unpersist(false)
     byDst.unpersist(false)

@@ -45,13 +45,13 @@ object KCore {
 
     val init = vertices.select(col("vid"), lit(true).as("alive"), lit(true).as("removed"))
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts), counts = Seq("removed")) { state =>
       val deg = survivorDegrees(state.where(col("alive")))
       state.join(deg, Seq("vid"), "left").select(
         col("vid"),
         (col("alive") && coalesce(col("deg"), lit(0L)) >= k).as("alive"),
         (col("alive") && coalesce(col("deg"), lit(0L)) < k).as("removed"))
-    } { next => next.where(col("removed")).count() }
+    }
 
     val core = survivorDegrees(res.state.where(col("alive")))
       .select(col("vid"), col("deg").as("core_degree"))

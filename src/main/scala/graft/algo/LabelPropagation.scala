@@ -25,7 +25,7 @@ object LabelPropagation {
   def run(edges: DataFrame, vertices: DataFrame, iterations: Int = 5): DataFrame = {
     val (sym, parts) = graft.core.IterCache.byKeyAdaptive(LinkGraph.symmetrize(edges), "src")
     val init = vertices.select(col("vid"), col("vid").as("lab"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       val counts = sym
         .join(state.select(col("vid").as("src"), col("lab")).hint("shuffle_hash"), "src")
         .groupBy(col("dst"), col("lab"))
@@ -37,7 +37,7 @@ object LabelPropagation {
         .select(col("vid"), (-col("top.neglab")).as("newlab"))
       state.join(best, Seq("vid"), "left")
         .select(col("vid"), coalesce(col("newlab"), col("lab")).as("lab"))
-    } { _ => 1L } // fixed iteration count, no early exit
+    } // no counts: fixed iteration count, no early exit
     sym.unpersist(false)
     res.state.select(col("vid"), col("lab").as("label"))
   }

@@ -91,9 +91,9 @@ object PageRank {
       vertices: Option[DataFrame] = None): Result = {
     val (sym, parts) = symCache(edges)
     val res = IterativeRunner.loop(initState(sym, vertices), maxIter,
-      checkpointer = checkpointer, shuffleParts = Some(parts)) {
-      (state, _) => step(sym, state, resetProb, tol)
-    } { next => next.where(col("active")).count() }
+      checkpointer = checkpointer, shuffleParts = Some(parts), counts = Seq("active")) {
+      state => step(sym, state, resetProb, tol)
+    }
     sym.unpersist(false)
     Result(res.state.select("vid", "pr"), res.iterations, res.metrics)
   }
@@ -148,32 +148,16 @@ object PageRank {
       .select(col("vid"), col("pr"), col("deg"),
         lit(0.0).as("sent"), lit(0.0).as("msum"),
         lit(true).as("active"), lit(true).as("conv"))
-    // per-iteration frontier sizes, observed by the SAME action that
-    // computes the stop count (no extra job) and returned in
-    // Result.frontierSizes; `metrics.activeCount` records the stop
-    // criterion's conv count (change ≥ tol), a strict subset of the frontier
-    val frontierSizes = Vector.newBuilder[Long]
-    // last observed frontier size, for the broadcast-tail switch (below)
-    var lastFrontier = Long.MaxValue
-    val res = IterativeRunner.loop(init, maxIter, checkpointer = checkpointer,
-      shuffleParts = Some(parts)) { (state, _) =>
-      // the active frontier publishes the CHANGE in its contribution
-      // (iteration 1: everyone is active with sent=0 → full sums establish
-      // msum, identically to the exact first superstep)
+    // one superstep shape per join strategy for the frontier side: the
+    // per-iteration message sums from the frontier's contribution CHANGE
+    // (iteration 1: everyone is active with sent=0 → full sums establish
+    // msum, identically to the exact first superstep)
+    def superstep(frontierSide: DataFrame => DataFrame)(state: DataFrame): DataFrame = {
       val frontierDf = state.where(col("active"))
         .select(col("vid").as("src"),
           (when(col("deg") > 0, col("pr") / col("deg")).otherwise(lit(0.0))
             - col("sent")).as("dc"))
-      // broadcast-tail switch (cluster-shape lever): once the frontier has
-      // shrunk below `broadcastTail`, ship it to every task instead of
-      // shuffling the edge side's join keys — on a cluster this removes the
-      // per-iteration exchange entirely for the long convergence tail.
-      // Local[32] A/B numbers in BASELINE.md §h. Default off: the exact
-      // shuffle-hash shape stays the measured/oracled path.
-      val frontierSide =
-        if (broadcastTail.exists(lastFrontier <= _)) broadcast(frontierDf)
-        else frontierDf.hint("shuffle_hash")
-      val dmsgs = sym.join(frontierSide, "src")
+      val dmsgs = sym.join(frontierSide(frontierDf), "src")
         .groupBy(col("dst").as("vid"))
         .agg(sum(col("dc")).as("dsum"))
       state
@@ -195,19 +179,26 @@ object PageRank {
             .as("active"),
           (abs(lit(1.0 - resetProb) * (col("msum") - col("pr"))) >= lit(tol))
             .as("conv"))
-    } { next =>
-      // ONE action for both counts: conv (stop criterion — what
-      // metrics.activeCount records) and active (frontier size)
-      val r = next.agg(
-        count(when(col("conv"), lit(1))).as("conv"),
-        count(when(col("active"), lit(1))).as("act")).head()
-      lastFrontier = r.getLong(1)
-      frontierSizes += lastFrontier
-      r.getLong(0)
     }
+    // broadcast-tail switch (cluster-shape lever): once the frontier has
+    // shrunk to `broadcastTail`, the loop moves to a second segment that
+    // ships the frontier to every task instead of shuffling the edge side's
+    // join keys — on a cluster this removes the per-iteration exchange for
+    // the long convergence tail. Local[32] A/B numbers in BASELINE.md §h.
+    // Default off: the exact shuffle-hash shape stays the measured/oracled
+    // path.
+    val shuffled = superstep(_.hint("shuffle_hash")) _
+    val steps = if (broadcastTail.isEmpty) Seq(shuffled)
+      else Seq(shuffled, superstep(broadcast(_)) _)
+    // ONE job per superstep counts both: conv (the stop criterion — what
+    // metrics.activeCount records) and active (the frontier size, returned
+    // in Result.frontierSizes)
+    val res = IterativeRunner.loop(init, maxIter, checkpointer = checkpointer,
+      shuffleParts = Some(parts), counts = Seq("conv", "active"),
+      switchWhen = c => broadcastTail.exists(c(1) <= _))(steps: _*)
     sym.unpersist(false)
     Result(res.state.select("vid", "pr"), res.iterations, res.metrics,
-      frontierSizes.result())
+      res.metrics.map(_.counts(1)))
   }
 
   /** Personalized PageRank / random-walk-with-restart, fixed iterations
@@ -247,7 +238,7 @@ object PageRank {
     val init = symw.groupBy(col("src").as("vid"))
       .agg(sum(col("weight")).cast("double").as("wdeg"))
       .select(col("vid"), lit(1.0).as("pr"), col("wdeg"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       val msgs = symw
         .join(state.select(col("vid").as("src"), (col("pr") / col("wdeg")).as("contrib"))
           .hint("shuffle_hash"), "src")
@@ -259,7 +250,7 @@ object PageRank {
           (lit(resetProb) * col("pr") +
             lit(1.0 - resetProb) * coalesce(col("msum"), lit(0.0))).as("pr"),
           col("wdeg"))
-    } { _ => 1L } // fixed iterations
+    }
     symw.unpersist(false)
     res.state.select("vid", "pr")
   }
@@ -274,14 +265,14 @@ object PageRank {
       .join(sources.select(col("vid"), lit(1.0).as("r0")), Seq("vid"), "left")
       .select(col("vid"), coalesce(col("r0"), lit(0.0)).as("r0"),
         coalesce(col("r0"), lit(0.0)).as("pr"), col("deg"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       state
         .join(messageSums(sym, state).hint("shuffle_hash"), Seq("vid"), "left")
         .select(col("vid"), col("r0"),
           (lit(resetProb) * col("r0") +
             lit(1.0 - resetProb) * coalesce(col("msum"), lit(0.0))).as("pr"),
           col("deg"))
-    } { _ => 1L } // fixed iterations
+    }
     sym.unpersist(false)
     res.state.select("vid", "pr")
   }
@@ -294,10 +285,11 @@ object PageRank {
       vertices: Option[DataFrame] = None,
       checkpointer: Option[Checkpointer] = None): DataFrame = {
     val (sym, parts) = symCache(edges)
+    // no counts: no early exit, run exactly `iterations` supersteps
     val res = IterativeRunner.loop(initState(sym, vertices), iterations,
-      checkpointer = checkpointer, shuffleParts = Some(parts)) { (state, _) =>
-      step(sym, state, resetProb, tol = 0.0)
-    } { _ => 1L } // no early exit: run exactly `iterations` supersteps
+      checkpointer = checkpointer, shuffleParts = Some(parts)) {
+      state => step(sym, state, resetProb, tol = 0.0)
+    }
     sym.unpersist(false)
     res.state.select("vid", "pr")
   }

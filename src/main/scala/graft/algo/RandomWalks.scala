@@ -87,7 +87,8 @@ object RandomWalks {
     // the cached index (identical rows: count of sym edges per src) instead
     // of re-deriving the upstream edge table a second time
     val nIdx = idx.count()
-    graft.core.IterCache.withAdaptiveConf(spark, nIdx) {
+    graft.core.IterCache.loopConf(spark,
+      Some(graft.core.IterCache.adaptiveParts(spark, nIdx))) {
       val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
         .crossJoin(spark.range(walksPerVertex).select(col("id").as("rep")))
         .select(
@@ -139,7 +140,8 @@ object RandomWalks {
     val nIdx = idx.count()
     val nbrSet = idx
       .select(col("src").as("m_src"), col("dst").as("m_dst"), lit(true).as("in_nbr"))
-    graft.core.IterCache.withAdaptiveConf(spark, nIdx) {
+    graft.core.IterCache.loopConf(spark,
+      Some(graft.core.IterCache.adaptiveParts(spark, nIdx))) {
     // step 1: uniform first hop
     val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
       .crossJoin(spark.range(walksPerVertex).select(col("id").as("rep")))
@@ -218,7 +220,8 @@ object RandomWalks {
     // (round-6 review finding; the leaf materializes it once)
     val degK = idx.groupBy("src", "kind").agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
-    graft.core.IterCache.withAdaptiveConf(edges.sparkSession, nIdx) {
+    graft.core.IterCache.loopConf(edges.sparkSession,
+      Some(graft.core.IterCache.adaptiveParts(edges.sparkSession, nIdx))) {
     val starts = vertices.where(col("kind") === metaPath.head)
       .select(col("vid").as("walk_id"), col("vid").as("cur"), array(col("vid")).as("path"),
         lit(false).as("stopped"))

@@ -94,11 +94,7 @@ object SVDPlusPlus {
     // mean aggregate above already materialized the persisted edge cache.
     val loopParts = graft.core.IterCache.adaptiveParts(spark,
       e.count() * 2L * conf.rank)
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    graft.core.IterCache.loopConf(spark, Some(loopParts)) {
 
     // init: bias = mean incident rating - u, norm = 1/sqrt(deg)  (reference
     // Graph.updateVertexAttr init, SVDPlusPlus.scala:32-38)
@@ -228,9 +224,6 @@ object SVDPlusPlus {
     val n = e.count()
     e.unpersist(false)
     Result(v, u, sqErr / n)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
     }
   }
 }

@@ -47,7 +47,7 @@ object ShortestPaths {
         coalesce(col("is_src"), lit(false)).as("active"))
 
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts), counts = Seq("active")) { state =>
       val msgs = sym
         .join(state.where(col("active")).select(col("vid").as("src"), col("dist"))
           .hint("shuffle_hash"), "src")
@@ -58,7 +58,7 @@ object ShortestPaths {
         least(col("dist"), col("cand")).as("dist"), // least skips nulls
         (col("cand").isNotNull &&
           (col("dist").isNull || col("cand") < col("dist"))).as("active"))
-    } { next => next.where(col("active")).count() }
+    }
 
     val out = res.state
       .select(col("vid"), coalesce(col("dist"), lit(-1L)).as("dist"))
@@ -90,7 +90,7 @@ object ShortestPaths {
       lit(0L).as("dist"), lit(true).as("active"))
 
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts), counts = Seq("active")) { state =>
       val msgs = sym
         .join(state.where(col("active"))
           .select(col("vid").as("src"), col("lm"), col("dist")).hint("shuffle_hash"), "src")
@@ -103,7 +103,7 @@ object ShortestPaths {
         least(col("dist"), col("cand")).as("dist"),
         (col("cand").isNotNull &&
           (col("dist").isNull || col("cand") < col("dist"))).as("active"))
-    } { next => next.where(col("active")).count() }
+    }
 
     val out = res.state.select(col("vid"), col("lm"), col("dist")).localCheckpoint(false)
     sym.unpersist(false)

@@ -55,20 +55,21 @@ object IterCache {
     math.max(1L, math.min(cores * 8L, math.max(byThroughput, fill))).toInt
   }
 
-  /** Run `body` with loop-shaped session settings: shuffle partitions =
-    * [[adaptiveParts]](rows) and AQE off (static right-sized plans — AQE's
-    * per-stage re-planning only adds driver overhead to a chain of
-    * mini-queries; same rationale as [[IterativeRunner.loop]]), restored
-    * afterwards. For loop-style operators that do not go through
-    * IterativeRunner (random walks, SGD, dedup propagation). NOTE: any
-    * DataFrame RETURNED out of `body` is planned at the caller's action,
-    * under the restored session settings. */
-  def withAdaptiveConf[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(body: => T): T = {
-    val parts = adaptiveParts(spark, rows)
+  /** Runs `body` with loop-shaped session settings and restores them
+    * afterwards: AQE off (static right-sized plans — AQE's per-stage
+    * re-planning only adds driver overhead to a chain of mini-queries, and
+    * [[IterativeRunner]] replays one static plan) and, when given, `parts`
+    * shuffle partitions. `body` may set `spark.sql.shuffle.partitions`
+    * itself mid-scope (ConnectedComponents sizes it from its first action);
+    * the restore covers that too. The one scope for every loop-style
+    * operator: IterativeRunner, random walks, SGD, dedup propagation, star
+    * contraction. NOTE: any DataFrame RETURNED out of `body` is planned at
+    * the caller's action, under the restored session settings. */
+  def loopConf[T](spark: org.apache.spark.sql.SparkSession, parts: Option[Int])(body: => T): T = {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    parts.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p.toString))
     try body finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
       spark.conf.set("spark.sql.shuffle.partitions", partsBefore)

@@ -309,11 +309,7 @@ object Dedup {
     // — with right-sized static partitions its per-stage re-planning only
     // adds driver overhead to the ~9 mini-queries of the round chain.
     val loopParts = graft.core.IterCache.adaptiveParts(spark, sym.count())
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    graft.core.IterCache.loopConf(spark, Some(loopParts)) {
     var state = sym.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("canonical"))
       .localCheckpoint(false)
@@ -345,14 +341,11 @@ object Dedup {
       }
     }
     // `out` is corpus-sized but PLANNED at the caller's action, after the
-    // finally below restored the session settings — so it does not inherit
+    // scope restored the session settings — so it does not inherit
     // the loop's tiny partition count
     val out = docs.select(col("doc_id")).join(state.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("canonical"), col("doc_id")).as("canonical_id"))
     (out, unconverged)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
     }
   }
 

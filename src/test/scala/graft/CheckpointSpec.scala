@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core.{Checkpointer, IterativeRunner}
@@ -17,17 +19,17 @@ class CheckpointSpec extends SparkTestBase {
     val init = (1L to 20L).map(v => (v, v.toDouble, true)).toDF("vid", "value", "active")
 
     val full = IterativeRunner.loop(init, maxIter = 9, truncateEvery = 3,
-      checkpointer = Some(new Checkpointer(spark, root, "run-full")))(countdownStep)(
-      _.where($"active").count())
+      checkpointer = Some(new Checkpointer(spark, root, "run-full")), counts = Seq("active"))(
+      countdownStep(_, 0))
 
     // "killed" run: stop at iteration 5 (checkpoints committed at 3)
     IterativeRunner.loop(init, maxIter = 5, truncateEvery = 3,
-      checkpointer = Some(new Checkpointer(spark, root, "run-killed")))(countdownStep)(
-      _.where($"active").count())
+      checkpointer = Some(new Checkpointer(spark, root, "run-killed")), counts = Seq("active"))(
+      countdownStep(_, 0))
     // resume with the same runId: restarts from iter 3, continues to 9
     val resumed = IterativeRunner.loop(init, maxIter = 9, truncateEvery = 3,
-      checkpointer = Some(new Checkpointer(spark, root, "run-killed")))(countdownStep)(
-      _.where($"active").count())
+      checkpointer = Some(new Checkpointer(spark, root, "run-killed")), counts = Seq("active"))(
+      countdownStep(_, 0))
 
     val a = full.state.select("vid", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
     val b = resumed.state.select("vid", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
@@ -42,6 +44,11 @@ class CheckpointSpec extends SparkTestBase {
     // metrics log has one line per iteration
     val metrics = Files.readAllLines(java.nio.file.Paths.get(s"$root/run-full/metrics.jsonl"))
     assert(metrics.size == full.iterations)
+    // ... also after a resume: the killed run's lines past its snapshot are
+    // dropped, not duplicated by the resumed run
+    val resumedIters = Files.readAllLines(java.nio.file.Paths.get(s"$root/run-killed/metrics.jsonl"))
+      .asScala.map(l => "\"iter\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toInt).toSeq
+    assert(resumedIters == (1 to 9), s"resumed metrics iterations: $resumedIters")
   }
 
   test("restore picks the latest COMPLETE snapshot only") {
